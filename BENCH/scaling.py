@@ -282,8 +282,8 @@ def main() -> None:
 
 Same job — the full default contract (fused stats pass + uniqueness +
 referential integrity + cube-based hist2d outlier + the merged one-cube
-PSI/KS drift family + verdict/violation sinks, granularity='run': two
-actions, 26 Spark jobs total per run) — on the same input
+PSI/KS drift family + verdict/violation sinks, one driver thread per
+family) — on the same input
 ({rows:,} rows, {SCALING_FILES:,}-file synthesized code-table fixture,
 seed 42), interleaved (local[{N_CORES}], local[{N4_CORES}]) subprocess pairs behind an
 idle-window gate, one warm-up (120k fixture) + ONE timed run per fresh JVM.

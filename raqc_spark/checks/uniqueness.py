@@ -35,9 +35,8 @@ def uniqueness_check(
 ) -> tuple[DataFrame, DataFrame]:
     """``pool``: optional persist pool (runner-owned). The dup-key table is
     tiny (bounded by violations) but expensive to derive (full-table
-    groupBy); persisting it means the violations sink and the verdict
-    aggregation — separate Spark actions in run-granularity mode — derive it
-    once instead of twice.
+    groupBy); persisting it means the violations write and the verdict
+    collect — separate Spark actions — derive it once instead of twice.
 
     ``partition_spec``: when given AND the check keys include the partition
     key, per-partition violation counts derive straight from the persisted

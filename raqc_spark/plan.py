@@ -26,7 +26,7 @@ from raqc_spark.checks.stats import STATS_KINDS, compile_stats_pass
 from raqc_spark.checks.uniqueness import uniqueness_check
 from raqc_spark.contract import Check, Contract
 from raqc_spark.functions import with_derived, with_partition_id
-from raqc_spark.results import VERDICT_COLS, VERDICT_SCHEMA
+from raqc_spark.results import VERDICT_SCHEMA
 
 
 def prepare(df: DataFrame, contract: Contract) -> DataFrame:
@@ -220,11 +220,3 @@ def compile_plan(
         )
 
     return families
-
-
-def union_verdicts(parts: list[DataFrame]) -> DataFrame:
-    out = None
-    for p in parts:
-        p = p.select(*VERDICT_COLS)
-        out = p if out is None else out.unionByName(p)
-    return out

@@ -39,10 +39,9 @@ from dataclasses import dataclass
 from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from raqc_spark.contract import Contract
-from raqc_spark.plan import CompiledFamily, compile_plan, prepare, union_verdicts
+from raqc_spark.plan import CompiledFamily, compile_plan, prepare
 from raqc_spark.results import VERDICT_SCHEMA
 
 
@@ -180,9 +179,6 @@ class Manifest:
             entry["complete"] = bool(complete)
             self._swap(data)
 
-    def complete_family(self, family: str, verdict_rows: list[dict]) -> None:
-        self.record(family, verdict_rows, complete=True)
-
     def state(self) -> dict[str, tuple[list[dict], bool]]:
         """family -> (verdict rows so far, complete?)."""
         out = {}
@@ -195,19 +191,17 @@ class Manifest:
         return {k: rows for k, (rows, done) in self.state().items() if done}
 
 
-def _write_violations(
-    violations: DataFrame, out: str, keys: tuple[str, ...] = ("partition_id",)
-) -> None:
+def _write_violations(violations: DataFrame, out: str) -> None:
     """Partition-granular idempotent sink: dynamic overwrite replaces only
     the partition directories present in this write. Violations are
     repartitioned onto their sink partitioning first — one writer task per
     directory instead of every task writing every directory (at 10^12-file
     scale the latter is a small-files explosion AND a slow commit)."""
     (
-        violations.repartition(*[F.col(k) for k in keys])
+        violations.repartition("partition_id")
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*keys)
+        .partitionBy("partition_id")
         .parquet(out)
     )
 
@@ -243,79 +237,15 @@ def _run_family(
     all_rows: list[dict] = []
     for i, chunk in enumerate(chunks):
         verdicts, violations = fam.build(chunk)
-        # NOT overlapped (unlike run mode, r5): family threads already run
-        # concurrently, so doubling each thread's in-flight actions was
-        # measured to oversubscribe the scheduler and SLOW batched mode
-        # (quiet probe: 22.9-25.0s vs 17.4-20.7s sequential on the 600k
-        # fixture at local[32]) — run mode wins from overlap because it has
-        # exactly two actions total, not 2 x families x batches.
+        # Write then collect, NOT overlapped: the family threads already keep
+        # several actions in flight, and doubling each thread's actions
+        # oversubscribes the scheduler.
         if violations is not None:
             _write_violations(violations, out)
         rows = [r.asDict() for r in verdicts.collect()]  # tiny: P × checks
         manifest.record(fam.name, rows, complete=(i == len(chunks) - 1))
         all_rows.extend(rows)
     return all_rows
-
-
-def _run_batched(
-    work: list[tuple[CompiledFamily, frozenset[int] | None]],
-    run_dir: str,
-    manifest: Manifest,
-    overlap: bool = True,
-) -> list[dict]:
-    """granularity='run': union every family's violations into ONE write and
-    every family's verdicts into ONE collect (two actions total), then split
-    the collected rows back out into per-family manifest entries. The union
-    write is partitioned by (family, partition_id) with dynamic overwrite, so
-    families absent from this run — e.g. already-checkpointed ones during a
-    resume — keep their violation parquet intact."""
-    verdict_parts, viol_parts = [], []
-    for fam, pids in work:
-        v, viol = fam.build(pids)
-        verdict_parts.append(v)
-        if viol is not None:
-            viol_parts.append(viol.withColumn("family", F.lit(_safe(fam.name))))
-
-    def _write() -> None:
-        if not viol_parts:
-            return
-        allv = viol_parts[0]
-        for p in viol_parts[1:]:
-            allv = allv.unionByName(p)
-        out = os.path.join(run_dir, "violations")
-        _write_violations(allv, out, keys=("family", "partition_id"))
-
-    def _collect() -> list[dict]:
-        return [r.asDict() for r in union_verdicts(verdict_parts).collect()]
-
-    # The two actions are independent DAGs over the same (cached) prepared
-    # snapshot — submit them from concurrent driver threads, like family
-    # mode already does per family, so each action's straggler tail and
-    # inter-job driver gaps overlap with the other's work (the r4 event-log
-    # decomposition charged ~7s of the 58s local[8] wall to packing slack).
-    # Caveat measured in r5: with a COLD cache the two actions double-
-    # compute the scan (cross-action cache fill is not cooperative the way
-    # one action's AQE leaf stages are) — run_contract therefore
-    # pre-materializes the cache before calling here (see the pre-count
-    # above). Defaulted ON after the interleaved quiet 3-way A/B showed
-    # pre-count+overlap fastest at both local[2] and local[8]
-    # (BENCH/BASELINE.md r5); RAQC_RUN_OVERLAP=0 restores sequential.
-    if overlap and os.environ.get("RAQC_RUN_OVERLAP", "1") == "1":
-        with ThreadPoolExecutor(max_workers=2) as pool2:
-            fut_w = pool2.submit(_write)
-            fut_c = pool2.submit(_collect)
-            rows = fut_c.result()
-            fut_w.result()
-    else:
-        _write()
-        rows = _collect()
-    by_check: dict[str, list[dict]] = {}
-    for r in rows:
-        by_check.setdefault(r["check_name"], []).append(r)
-    for fam, _pids in work:
-        fam_rows = [r for c in fam.checks for r in by_check.get(c.name, [])]
-        manifest.record(fam.name, fam_rows, complete=True)
-    return rows
 
 
 def run_contract(
@@ -336,23 +266,24 @@ def run_contract(
     (right call in local/bench mode; on a 100 TB cluster rely on the
     shared-scan fusion instead and pass cache=False).
 
-    ``granularity`` — checkpoint/action granularity:
-      * ``"family"``: one violations write + one verdict collect per check
-        family; resumable at family level, and at partition level when a
-        family checkpointed partially (the default).
-      * ``"run"``: the whole contract executes as TWO actions — one union
-        violations write, one union verdict collect. ~5x fewer job barriers,
-        the right mode for throughput runs; the manifest still records
-        per-partition lineage afterwards, so a re-run resumes either way.
+    ``granularity`` — ``"family"`` or ``"run"``; kept for existing callers.
+    Both values run the one executor: one driver thread per check family,
+    each writing its violations and collecting its verdicts once per
+    partition batch, with a manifest commit after each. Any other value
+    raises ``ValueError``.
 
-    ``partition_batches`` — with granularity='family', split each splittable
-    family into this many partition_id batches, checkpointing the manifest
-    after each: a crash loses at most one batch, and the resume recomputes
-    only the partitions with no manifest entry.
+    ``partition_batches`` — split each splittable family into this many
+    partition_id batches, checkpointing the manifest after each: a crash
+    loses at most one batch, and the resume recomputes only the partitions
+    with no manifest entry.
 
     ``resume=False`` starts clean: prior manifest and violation sinks under
     ``run_dir`` are removed (a fresh run must not inherit stale partitions).
     """
+    if granularity not in ("family", "run"):
+        raise ValueError(
+            f"granularity must be 'family' or 'run', got {granularity!r}"
+        )
     os.makedirs(run_dir, exist_ok=True)
     manifest = Manifest(run_dir)
     fingerprint = contract_fingerprint(contract, s2, s1, commits_dim)
@@ -392,14 +323,13 @@ def run_contract(
             s1p = s1p.select("partition_id", *drift_cols).persist()
             persist_pool.append(s1p)
     if cache:
-        if granularity == "family" and partition_batches > 1:
+        if partition_batches > 1:
             # Local (no-shuffle) sort by partition_id before caching: the
             # in-memory columnar batches become runs of a single pid, so each
             # partition-batch build's `partition_id IN (...)` filter prunes
             # ~(1 - 1/batches) of the cache via batch min/max stats instead
-            # of rescanning the whole table per chunk — the dominant cost of
-            # batched family mode (VERDICT r3 task 5: 27.0s vs 15.5s run
-            # mode on the same fixture).
+            # of rescanning the whole table per chunk, which would otherwise
+            # dominate a batched run.
             s2p = s2p.sortWithinPartitions("partition_id")
         s2p = s2p.persist()
 
@@ -430,58 +360,26 @@ def run_contract(
             # untouched, or partial-but-unsplittable: (re)run fully
             work.append((fam, None))
     try:
-        precount_done = False
-        if cache and work and (
-            granularity != "run"
-            or os.environ.get("RAQC_RUN_PRECOUNT", "1") == "1"
-        ):
-            # materialize the cache once before the concurrent-action
-            # fan-out (family threads, or run mode's write∥collect pair).
-            # History: r4 measured a pre-count at +13%/local[2] against the
-            # then-SEQUENTIAL run mode (one action's AQE leaf stages fill
-            # the cache cooperatively, so the pre-count only added a
-            # barrier). With r5's overlapped actions the trade inverts:
-            # cross-action fill is NOT cooperative — two cold actions
-            # double-compute the scan (measured 229s vs 174s seq at
-            # local[2]) — while pre-count + overlap beats sequential at
-            # BOTH levels (local[2] 156.5s vs 173.8s; local[8] 50.7s vs
-            # 55.4s; interleaved quiet A/B, BENCH/BASELINE.md r5).
+        if cache and work:
+            # Materialize the cache once before the family threads fan out:
+            # concurrent actions over a cold cache do not fill it
+            # cooperatively, so each would recompute the scan.
             s2p.count()
-            precount_done = True
-        if granularity == "run" and work:
-            # overlap only when the prepared snapshot is cached AND the
-            # pre-count actually ran: either miss means the two concurrent
-            # actions fill a cold cache non-cooperatively and double-
-            # compute the scan (measured 229s vs 174s seq at local[2], r5).
-            # Gating on precount_done (not just cache) closes the ADVICE
-            # r5 env-combination hazard RAQC_RUN_PRECOUNT=0 +
-            # RAQC_RUN_OVERLAP=1, which previously composed into exactly
-            # that known-bad mode.
-            all_rows.extend(
-                _run_batched(
-                    work, run_dir, manifest, overlap=cache and precount_done
+        # Families are independent DAGs -> submit them from concurrent
+        # driver threads; Spark's scheduler interleaves their stages so
+        # small stages don't serialize the whole contract (FAIR-ish use
+        # of the cluster without touching scheduler pools).
+        with ThreadPoolExecutor(max_workers=max(1, len(work))) as pool:
+            futures = [
+                pool.submit(
+                    _run_family, fam, run_dir, manifest, pids,
+                    partition_batches, all_pids,
                 )
-            )
-            ran.extend(f.name for f, _ in work)
-        else:
-            # Families are independent DAGs -> submit them from concurrent
-            # driver threads; Spark's scheduler interleaves their stages so
-            # small stages don't serialize the whole contract (FAIR-ish use
-            # of the cluster without touching scheduler pools).
-            workers = int(os.environ.get("RAQC_FAMILY_WORKERS", "0")) or max(
-                1, len(work)
-            )
-            with ThreadPoolExecutor(max_workers=workers) as pool:
-                futures = [
-                    pool.submit(
-                        _run_family, fam, run_dir, manifest, pids,
-                        partition_batches, all_pids,
-                    )
-                    for fam, pids in work
-                ]
-                for (fam, _), fut in zip(work, futures, strict=True):
-                    all_rows.extend(fut.result())
-                    ran.append(fam.name)
+                for fam, pids in work
+            ]
+            for (fam, _), fut in zip(work, futures, strict=True):
+                all_rows.extend(fut.result())
+                ran.append(fam.name)
     finally:
         if cache:
             s2p.unpersist()

@@ -72,6 +72,12 @@ def test_ci_grep_no_row_udfs_in_engine_source():
     assert not bad, f"row-at-a-time Python UDFs found: {bad}"
 
 
+def test_runner_reads_no_env_toggles():
+    """The runner's behaviour is set by its arguments alone: settled A/B
+    toggles read from the environment stay deleted."""
+    assert "os.environ" not in (ENGINE_DIR / "runner.py").read_text()
+
+
 def test_stats_pass_is_single_shared_aggregation(spark, snapshots):
     """The fused stats pass produces ONE Exchange over partition_id for the
     shared agg (not one scan per check)."""

@@ -6,6 +6,8 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
+
 from raqc_spark.contract import default_contract
 from raqc_spark.runner import run_contract
 
@@ -259,34 +261,73 @@ def test_resume_refuses_rewritten_input_files(spark, snapshots, tmp_path):
                      commits_dim=commits, run_dir=rd, resume=True)
 
 
-def test_precount_off_forces_sequential_actions(
-    spark, snapshots, tmp_path, monkeypatch
-):
-    """ADVICE r5 env-combination hazard: RAQC_RUN_PRECOUNT=0 with the
-    default RAQC_RUN_OVERLAP=1 must NOT overlap write/collect over a cold
-    cache (the measured 229s-vs-174s double-compute mode) — overlap is
-    gated on the pre-count actually having run, not just on cache=True."""
-    import raqc_spark.runner as runner_mod
-
+def test_unknown_granularity_raises(spark, snapshots, tmp_path):
     s1, s2, commits = snapshots
-    seen: list[bool] = []
-    real = runner_mod._run_batched
+    with pytest.raises(ValueError, match="granularity"):
+        run_contract(spark, default_contract(), s2, s1=s1, commits_dim=commits,
+                     run_dir=str(tmp_path / "bad"), granularity="partition")
 
-    def spy(work, run_dir, manifest, overlap=True):
-        seen.append(overlap)
-        return real(work, run_dir, manifest, overlap=overlap)
 
-    monkeypatch.setattr(runner_mod, "_run_batched", spy)
+class _Crash(Exception):
+    pass
 
-    monkeypatch.setenv("RAQC_RUN_PRECOUNT", "0")
-    monkeypatch.setenv("RAQC_RUN_OVERLAP", "1")
-    run_contract(spark, default_contract(), s2, s1=s1, commits_dim=commits,
-                 run_dir=str(tmp_path / "nopc"), resume=False, cache=True,
-                 granularity="run")
-    assert seen == [False], "cold cache must run sequential actions"
 
-    monkeypatch.setenv("RAQC_RUN_PRECOUNT", "1")
-    run_contract(spark, default_contract(), s2, s1=s1, commits_dim=commits,
-                 run_dir=str(tmp_path / "pc"), resume=False, cache=True,
-                 granularity="run")
-    assert seen == [False, True], "pre-counted cache keeps the overlap win"
+_KEY = ["check_name", "repo", "path", "commit", "content_sha"]
+
+
+def _violation_keys(spark, run_dir):
+    rows = spark.read.parquet(os.path.join(run_dir, "violations"))
+    return sorted(tuple(r) for r in rows.select(*_KEY).collect())
+
+
+@pytest.fixture(scope="module")
+def uninterrupted_batched(spark, snapshots, tmp_path_factory):
+    s1, s2, commits = snapshots
+    rd = str(tmp_path_factory.mktemp("uninterrupted"))
+    res = run_contract(spark, default_contract(), s2, s1=s1, commits_dim=commits,
+                       run_dir=rd, resume=False, partition_batches=4)
+    return {tuple(r) for r in res.verdicts.collect()}, _violation_keys(spark, rd)
+
+
+@pytest.mark.parametrize("crash_point", ["before_write", "after_write"])
+def test_crash_at_batch_commit_point_resumes_identically(
+    spark, snapshots, tmp_path, monkeypatch, uninterrupted_batched, crash_point
+):
+    """Crash inside the stats family's second partition batch, either before
+    its violations write or after it but before its manifest commit; the
+    resume must recompute exactly the uncommitted partitions and end with
+    the verdicts and violation rows of an uninterrupted run."""
+    import raqc_spark.runner as runner_mod
+    from raqc_spark.runner import Manifest
+
+    real = runner_mod._write_violations
+    stats_writes = []
+
+    def crashing_write(violations, out):
+        if os.path.basename(out) == "family=stats":
+            stats_writes.append(out)
+            if len(stats_writes) == 2:
+                if crash_point == "after_write":
+                    real(violations, out)
+                raise _Crash(crash_point)
+        real(violations, out)
+
+    monkeypatch.setattr(runner_mod, "_write_violations", crashing_write)
+    s1, s2, commits = snapshots
+    rd = str(tmp_path / "crash")
+    with pytest.raises(_Crash):
+        run_contract(spark, default_contract(), s2, s1=s1, commits_dim=commits,
+                     run_dir=rd, resume=False, partition_batches=4)
+    monkeypatch.undo()
+
+    rows, complete = Manifest(rd).state()["stats"]
+    assert not complete
+    committed = {int(r["partition_id"]) for r in rows}
+    res = run_contract(spark, default_contract(), s2, s1=s1, commits_dim=commits,
+                       run_dir=rd, resume=True, partition_batches=4)
+    all_pids = set(range(default_contract().partition_spec.num_partitions))
+    assert res.partitions_resumed == {"stats": sorted(all_pids - committed)}
+
+    verdicts, violations = uninterrupted_batched
+    assert {tuple(r) for r in res.verdicts.collect()} == verdicts
+    assert _violation_keys(spark, rd) == violations
