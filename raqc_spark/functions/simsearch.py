@@ -2,18 +2,20 @@
 
 - Brute-force cosine top-k: broadcast the (small) query set against the
   corpus; dot products via zip_with + aggregate (JVM higher-order fns —
-  deterministic left-to-right fold in double precision, no UDF).
+  deterministic left-to-right fold in double precision).
 - LSH-bucketed variant (scale path): sign-random-projection buckets from
   deterministic pseudo-random hyperplanes; candidates only join within a
   bucket, so cost tracks bucket occupancy instead of n².
+- IVF variant (scale path): the one superlinear stage, probes x list
+  members, is a cogrouped pandas UDF running one numpy matrix multiply per
+  (list, sub-list), so IVF needs numpy/pandas/pyarrow on the workers. Every
+  linear pass (norms, centroid assignment) stays a JVM fold.
 
 Ranking uses (rounded cosine DESC, id ASC) so the selected top-k SET is
 stable across engines/parallelism.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -42,6 +44,25 @@ def _norm(a: Column) -> Column:
     )
 
 
+def _pair_cosine() -> Column:
+    """Rounded cosine of the (q_vec, c_vec) pair from precomputed norms."""
+    return F.round(
+        _dot(F.col("q_vec"), F.col("c_vec"))
+        / (F.col("q_norm") * F.col("c_norm")),
+        6,
+    )
+
+
+def _topk(scored: DataFrame, k: int) -> DataFrame:
+    """Each query's k best (q_id, c_id, cosine) rows, ranked rk 1..k."""
+    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
+    return (
+        scored.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= k)
+        .select("q_id", "c_id", "cosine", "rk")
+    )
+
+
 def cosine_topk(
     emb: DataFrame,
     queries: DataFrame,
@@ -61,24 +82,10 @@ def cosine_topk(
         F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_vec")
     ).withColumn("c_norm", _norm(F.col("c_vec")))
 
-    scored = (
-        c.join(F.broadcast(q), F.col("c_id") != F.col("q_id"))
-        .withColumn(
-            "cosine",
-            F.round(
-                _dot(F.col("q_vec"), F.col("c_vec"))
-                / (F.col("q_norm") * F.col("c_norm")),
-                6,
-            ),
-        )
-        .select("q_id", "c_id", "cosine")
+    scored = c.join(F.broadcast(q), F.col("c_id") != F.col("q_id")).select(
+        "q_id", "c_id", _pair_cosine().alias("cosine")
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("q_id", "c_id", "cosine", "rk")
-    )
+    return _topk(scored, k)
 
 
 def _plane_component(plane: Column, dim: Column) -> Column:
@@ -110,20 +117,6 @@ def sign_bits(vec: Column, num_planes: int) -> Column:
     """array<bigint> of sign(dot(v, plane_p)) bits."""
     return F.transform(
         plane_projections(vec, num_planes), lambda x: (x > 0).cast("long")
-    )
-
-
-def lsh_bucket(
-    emb: DataFrame,
-    num_planes: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Sign-random-projection bucket id per vector (one long): the AND-
-    construction over all planes (use banded lsh_cosine_topk for retrieval)."""
-    bits = sign_bits(F.col(vec_col), num_planes)
-    return emb.select(
-        F.col(id_col).alias("doc"), F.xxhash64(bits).alias("bucket")
     )
 
 
@@ -218,69 +211,48 @@ def ivf_ranked_assignments(
     return centroids, ranked
 
 
-def ivf_assignments(
-    emb: DataFrame,
-    num_centroids: int = 16,
-    nprobe: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> tuple[DataFrame, DataFrame]:
-    """Round-2 API: (centroids, assignments at rank ≤ nprobe) — a thin view
-    over ivf_ranked_assignments for callers that need one assignment set."""
-    centroids, ranked = ivf_ranked_assignments(
-        emb, num_centroids, max_rank=nprobe, id_col=id_col, vec_col=vec_col
-    )
-    return centroids, ranked.select("doc", "cid")
-
-
 def _ivf_group_topk(k: int):
-    """Per-(list, sub-list) scorer for the Arrow path of ivf_cosine_topk:
-    one BLAS matrix multiply replaces |probes|x|members| interpreted
-    per-pair dot folds (guide §4.2 — batches to vectorized native code).
+    """Per-(list, sub-list) scorer for ivf_cosine_topk: one numpy matrix
+    multiply scores every probe against every list member (the batch-to-
+    native idea of "Accelerating Python UDFs in Vectorized Query
+    Execution", CIDR 2022).
 
-    Emits each probe's local top-k (by rounded cosine DESC, c_id ASC — the
-    exact final-window ordering), i.e. the same partial reduction the JVM
-    plan's WindowGroupLimit performed, so the global window's result is
-    unchanged. Raw (unrounded) cosines are returned; the JVM rounds them,
-    so output VALUES are Spark-rounded exactly as before — numpy rounding
-    is used only as the local selection key (verified result-identical on
-    every fixture SF; parity is also pinned by a test)."""
+    Emits a superset of each probe's local top-k: every non-self member
+    whose raw cosine is at least the probe's k-th best raw cosine - 2e-6.
+    Any 6-decimal rounding moves a value by at most 0.5e-6 and keeps order,
+    so a member below that cut rounds strictly below k kept members and
+    cannot reach the global top-k; the final window (Spark-rounded cosine
+    DESC, c_id ASC) picks among the rest. A NaN cosine is kept as Spark
+    orders NaN above every number. Raw cosines are returned and rounded by
+    Spark, so the output values are Spark's ``round``."""
     import numpy as np
     import pandas as pd
 
-    empty = {
-        "q_id": pd.Series(dtype="int64"),
-        "c_id": pd.Series(dtype="int64"),
-        "cosine": pd.Series(dtype="float64"),
-    }
-
     def score(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         if len(left) == 0 or len(right) == 0:
-            return pd.DataFrame(empty)
+            return pd.DataFrame(
+                {
+                    "q_id": left["q_id"].iloc[:0],
+                    "c_id": right["c_id"].iloc[:0],
+                    "cosine": pd.Series(dtype="float64"),
+                }
+            )
         q_ids = left["q_id"].to_numpy()
         qn = left["q_norm"].to_numpy(dtype=np.float64)
         Q = np.stack(left["q_vec"].to_numpy()).astype(np.float64)
         c_ids = right["c_id"].to_numpy()
         cn = right["c_norm"].to_numpy(dtype=np.float64)
         C = np.stack(right["c_vec"].to_numpy()).astype(np.float64)
-        # members sorted by c_id so a STABLE argsort on cosine breaks
-        # rounded-cosine ties by c_id ASC, matching the window ordering
-        order = np.argsort(c_ids, kind="stable")
-        c_ids, cn, C = c_ids[order], cn[order], C[order]
         S = Q @ C.T
         S /= qn[:, None]
         S /= cn[None, :]
         self_mask = q_ids[:, None] == c_ids[None, :]
-        key = np.where(self_mask, -np.inf, np.round(S, 6))
+        key = np.where(self_mask, -np.inf, np.where(np.isnan(S), np.inf, S))
         kk = min(k, S.shape[1])
-        idx = np.argsort(-key, axis=1, kind="stable")[:, :kk]
-        keep = ~np.take_along_axis(self_mask, idx, axis=1).ravel()
+        cut = np.partition(key, -kk, axis=1)[:, -kk] - 2e-6
+        qi, ci = np.nonzero((key >= cut[:, None]) & ~self_mask)
         return pd.DataFrame(
-            {
-                "q_id": np.repeat(q_ids, kk)[keep],
-                "c_id": c_ids[idx].ravel()[keep],
-                "cosine": np.take_along_axis(S, idx, axis=1).ravel()[keep],
-            }
+            {"q_id": q_ids[qi], "c_id": c_ids[ci], "cosine": S[qi, ci]}
         )
 
     return score
@@ -294,13 +266,13 @@ def ivf_cosine_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     list_splits: int | None = None,
-    arrow: bool | None = None,
 ) -> DataFrame:
     """IVF ANN: corpus vectors live in ONE inverted list (their nearest
     centroid); queries probe their ``nprobe`` nearest lists; exact cosine
     ranks the candidates. Cost tracks list occupancy (~rows·nprobe/centroids
     candidate pairs), not n². The alternative scale path to lsh_cosine_topk;
-    recall is pinned against exact top-k in tests/test_pipeline_ops.py.
+    recall is pinned against exact top-k, and the result against a
+    brute-force scoring of the probed lists, in tests/test_pipeline_ops.py.
 
     The corpus×centroids scoring pass runs ONCE (VERDICT r2 fix): both the
     corpus assignment (rk = 1) and the query probes (rk ≤ nprobe) are
@@ -312,19 +284,18 @@ def ivf_cosine_topk(
     candidate-PAIR set back to the vectors twice; AQE saw "tens of MB of id
     pairs", broadcast that side, and the pair explosion plus every dot
     product ran in ONE task (16.9s at sf0.1 for a 2k-vector corpus). Now
-    the join is BY LIST: probes (q_id, cid, q_vec) meet members
-    (c_id, cid, c_vec) on (cid, salt), the dot product is computed at the
-    join output, and the partial WindowGroupLimit prunes to ≤k rows per
-    query inside the same stage — so the only shuffles are linear in
+    probes (q_id, cid, q_vec) meet members (c_id, cid, c_vec) BY LIST:
+    both sides are cogrouped on (cid, sub), each group is scored by one
+    numpy matrix multiply (``_ivf_group_topk``) that emits only a superset
+    of each probe's local top-k, and a final window over those few rows
+    per query picks the top-k. The only shuffles are linear in
     corpus×nprobe×vec_size (probe side) and corpus×vec_size (member side),
     the corpus is NEVER broadcast, and parallelism is num_centroids ×
     ``list_splits`` (members hash-salted into sub-lists, probes replicated
     across them — the classic replicated-join split, immune to clustered-
     list skew). ``list_splits`` defaults to cover the cluster's default
-    parallelism.
+    parallelism. Output ids keep the type of ``id_col``.
     """
-    if arrow is None:
-        arrow = os.environ.get("RAQC_SIMSEARCH_ARROW", "1") != "0"
     _, ranked = ivf_ranked_assignments(
         emb, num_centroids, max_rank=nprobe, id_col=id_col, vec_col=vec_col
     )
@@ -360,8 +331,7 @@ def ivf_cosine_topk(
         )
         # EXPLICIT partition count (REPARTITION_BY_NUM): the members frame is
         # only corpus-rows wide, so AQE's size heuristic coalesces it to ~1
-        # partition — but this is the STREAM side of the list join, and the
-        # probes×members multiply + every dot product runs wherever these
+        # partition — but the probes×members multiply runs wherever these
         # partitions are. The cost is per-OUTPUT-row, invisible to AQE;
         # num_centroids×list_splits tasks ≈ one per (list, sub-list).
         .repartition(num_centroids * list_splits, "cid", "sub")
@@ -374,8 +344,8 @@ def ivf_cosine_topk(
             F.col("vec").alias("q_vec"), F.col("norm").alias("q_norm"),
         )
         .withColumn(
-            # LONG bounds so `sub` is bigint on BOTH sides: the JVM join
-            # coerces int-vs-long keys, but the Arrow cogroup matches groups
+            # LONG bounds so `sub` is bigint on BOTH sides: a JVM join
+            # coerces int-vs-long keys, but the cogroup matches groups
             # by raw partitioning hash, and murmur3(int 2) != murmur3(long 2)
             # — with an int sub here the two sides never co-partition
             "sub",
@@ -385,49 +355,28 @@ def ivf_cosine_topk(
                 )
             ),
         )
-        # pinned on BOTH sides: whichever side the planner streams (the
-        # other broadcasts), its explicit REPARTITION_BY_NUM survives AQE
-        # coalescing, so the pair multiply never collapses to one task.
+        # pinned on BOTH sides: each cogroup input's explicit
+        # REPARTITION_BY_NUM survives AQE coalescing, so the pair multiply
+        # never collapses to one task.
         .repartition(num_centroids * list_splits, "cid", "sub")
     )
-    if arrow:
-        # Arrow GEMM path (guide §4.2): the probes x members multiply is the
-        # ONLY superlinear stage (~rows^2 * nprobe / num_centroids pairs); as
-        # interpreted per-pair JVM folds it measured 89.7s at sf1.0 (150M
-        # pairs x 64 dims), as one per-group numpy matmul + local top-k the
-        # same result computes in ~2s. Grouping keys (cid, sub) match the
-        # pinned REPARTITION_BY_NUM exchanges, so cogroup reuses them and
-        # the fan-out/skew properties of the replicated list join carry over
-        # unchanged.
-        local = (
-            probes.groupBy("cid", "sub")
-            .cogroup(members.groupBy("cid", "sub"))
-            .applyInPandas(
-                _ivf_group_topk(k), "q_id long, c_id long, cosine double"
-            )
+    # The probes x members multiply is the ONLY superlinear stage
+    # (~rows^2 * nprobe / num_centroids pairs): as interpreted per-pair JVM
+    # folds it measured 89.7s at sf1.0 (150M pairs x 64 dims), as one numpy
+    # matmul per group ~2s. Grouping keys (cid, sub) match the pinned
+    # REPARTITION_BY_NUM exchanges, so cogroup reuses them and the
+    # fan-out/skew properties of the replicated list join carry over.
+    id_type = emb.schema[id_col].dataType.simpleString()
+    local = (
+        probes.groupBy("cid", "sub")
+        .cogroup(members.groupBy("cid", "sub"))
+        .applyInPandas(
+            _ivf_group_topk(k),
+            f"q_id {id_type}, c_id {id_type}, cosine double",
         )
-        scored = local.select(
-            "q_id", "c_id", F.round(F.col("cosine"), 6).alias("cosine")
-        )
-    else:
-        scored = (
-            probes.join(members, ["cid", "sub"])
-            .filter(F.col("q_id") != F.col("c_id"))
-            .select(
-                "q_id",
-                "c_id",
-                F.round(
-                    _dot(F.col("q_vec"), F.col("c_vec"))
-                    / (F.col("q_norm") * F.col("c_norm")),
-                    6,
-                ).alias("cosine"),
-            )
-        )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("q_id", "c_id", "cosine", "rk")
+    )
+    return _topk(
+        local.select("q_id", "c_id", F.round("cosine", 6).alias("cosine")), k
     )
 
 
@@ -452,30 +401,15 @@ def lsh_cosine_topk(
         F.col(vec_col).alias("vec"),
         _norm(F.col(vec_col)).alias("norm"),
     )
-    qa = e.select(
-        F.col("doc").alias("doc_a"), F.col("vec").alias("q_vec"),
-        F.col("norm").alias("q_norm"),
-    )
-    cb = e.select(
-        F.col("doc").alias("doc_b"), F.col("vec").alias("c_vec"),
-        F.col("norm").alias("c_norm"),
-    )
+    qa = e.toDF("doc_a", "q_vec", "q_norm")
+    cb = e.toDF("doc_b", "c_vec", "c_norm")
     scored = (
         sym.join(qa, "doc_a")
         .join(cb, "doc_b")
         .select(
             F.col("doc_a").alias("q_id"),
             F.col("doc_b").alias("c_id"),
-            F.round(
-                _dot(F.col("q_vec"), F.col("c_vec"))
-                / (F.col("q_norm") * F.col("c_norm")),
-                6,
-            ).alias("cosine"),
+            _pair_cosine().alias("cosine"),
         )
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("q_id", "c_id", "cosine", "rk")
-    )
+    return _topk(scored, k)

@@ -8,6 +8,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from raqc_spark.checks.drift import bucket_col
+from raqc_spark.functions.simsearch import _norm
 from raqc_spark.sources.testdata import load_table
 
 
@@ -451,10 +452,7 @@ def q_check_embedding_schema(spark, sf_dir):
     64-dim vector with finite norm; per-label rollup."""
     e = load_table(spark, sf_dir, "embeddings")
     dim_ok = F.size("embedding") == 64
-    norm = F.sqrt(F.aggregate(
-        "embedding", F.lit(0.0),
-        lambda acc, x: acc + x.cast("double") * x.cast("double"),
-    ))
+    norm = _norm(F.col("embedding"))
     return e.groupBy("label").agg(
         F.count(F.lit(1)).alias("n_vecs"),
         F.count_if(~dim_ok).alias("n_bad_dim"),

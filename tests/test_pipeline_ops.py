@@ -116,11 +116,13 @@ def test_minhash_estimate_tracks_exact_jaccard(spark):
         assert abs(e - x) <= 4 * 0.0625, (pair, e, x)
 
 
-def test_ivf_ann_recall_on_clustered_data(spark):
+@pytest.mark.parametrize("id_type", ["long", "int", "string"])
+def test_ivf_ann_recall_on_clustered_data(spark, id_type):
     """IVF's contract is cluster structure: on clustered vectors the probed
     inverted lists must recover >= 0.9 of exact top-k. (On the near-uniform
     driver embeddings IVF measures ~0.6 — that is the data violating IVF's
-    assumption, which is why lsh_cosine_topk is the default scale path.)"""
+    assumption, which is why lsh_cosine_topk is the default scale path.)
+    The output ids keep the input id column's type, numeric or not."""
     import numpy as np
 
     from raqc_spark.functions.simsearch import ivf_cosine_topk
@@ -131,18 +133,94 @@ def test_ivf_ann_recall_on_clustered_data(spark):
     for i in range(480):
         c = i % 8
         v = centers[c] + rng.normal(0, 0.15, 16)
-        rows.append((i, [float(x) for x in v]))
-    df = spark.createDataFrame(rows, ["vec_id", "embedding"])
+        rows.append((f"v{i}" if id_type == "string" else i,
+                     [float(x) for x in v]))
+    df = spark.createDataFrame(rows, f"vec_id {id_type}, embedding array<double>")
     gt = {
         (r["q_id"], r["c_id"])
         for r in cosine_topk(df, df, k=3).collect()
     }
-    ann = {
-        (r["q_id"], r["c_id"])
-        for r in ivf_cosine_topk(df, k=3, num_centroids=16, nprobe=4).collect()
-    }
+    ivf = ivf_cosine_topk(df, k=3, num_centroids=16, nprobe=4)
+    ann = {(r["q_id"], r["c_id"]) for r in ivf.collect()}
     recall = len(gt & ann) / len(gt)
     assert recall >= 0.9, f"IVF recall {recall:.3f} < 0.9 on clustered data"
+    in_type = df.schema["vec_id"].dataType
+    assert ivf.schema["q_id"].dataType == in_type
+    assert ivf.schema["c_id"].dataType == in_type
+
+
+@pytest.mark.parametrize(
+    "c_vecs, c_norms",
+    [
+        # round(0.1234565, 6) is 0.123457 in Spark (HALF_UP) but 0.123456
+        # under numpy's half-even np.round, a tie that c_id 1 would win
+        ([[0.123456, 0.0], [0.1234565, 0.0]], [1.0, 1.0]),
+        # a zero vector's cosine is NaN, which Spark orders above 1.0
+        ([[1.0, 0.0], [0.0, 0.0]], [1.0, 0.0]),
+    ],
+    ids=["half_up_tie", "nan_cosine"],
+)
+def test_ivf_local_cut_keeps_spark_winner(c_vecs, c_norms):
+    """The per-list scorer must not drop the member that Spark's final
+    window (rounded cosine DESC, c_id ASC) ranks first."""
+    import pandas as pd
+
+    from raqc_spark.functions.simsearch import _ivf_group_topk
+
+    probes = pd.DataFrame(
+        {"q_id": [0], "q_vec": [[1.0, 0.0]], "q_norm": [1.0]}
+    )
+    members = pd.DataFrame(
+        {"c_id": [1, 2], "c_vec": c_vecs, "c_norm": c_norms}
+    )
+    out = _ivf_group_topk(1)(probes, members)
+    assert 2 in set(out["c_id"]), out
+
+
+def test_ivf_matches_bruteforce_over_probed_lists(spark, embeddings):
+    """ivf_cosine_topk equals a float64 numpy brute force over the same
+    probed lists: every non-self member of a query's rk <= nprobe lists
+    (members live in their rk = 1 list), cosine rounded HALF_UP to 6
+    decimals as Spark's round does, ranked (cosine DESC, c_id ASC)."""
+    from collections import defaultdict
+    from decimal import ROUND_HALF_UP, Decimal
+
+    import numpy as np
+
+    from raqc_spark.functions.simsearch import (
+        ivf_cosine_topk,
+        ivf_ranked_assignments,
+    )
+
+    k, num_centroids, nprobe = 3, 16, 6
+    _, ranked = ivf_ranked_assignments(embeddings, num_centroids, max_rank=nprobe)
+    probed, lists = defaultdict(list), defaultdict(list)
+    for r in ranked.collect():
+        probed[r["doc"]].append(r["cid"])
+        if r["rk"] == 1:
+            lists[r["cid"]].append(r["doc"])
+    vecs = {
+        r["vec_id"]: np.asarray(r["embedding"], dtype=np.float64)
+        for r in embeddings.select("vec_id", "embedding").collect()
+    }
+    expected = set()
+    for q, cids in probed.items():
+        qv = vecs[q]
+        cands = []
+        for c in (c for cid in cids for c in lists[cid] if c != q):
+            cv = vecs[c]
+            cos = float(qv @ cv / (np.sqrt(qv @ qv) * np.sqrt(cv @ cv)))
+            rounded = Decimal(repr(cos)).quantize(Decimal("1e-6"), ROUND_HALF_UP)
+            cands.append((-rounded, c))
+        for rk, (_, c) in enumerate(sorted(cands)[:k], 1):
+            expected.add((q, c, rk))
+    got = {
+        (r["q_id"], r["c_id"], r["rk"])
+        for r in ivf_cosine_topk(
+            embeddings, k=k, num_centroids=num_centroids, nprobe=nprobe
+        ).collect()
+    }
+    assert got == expected
 
 
 def test_ivf_scoring_fanout_survives_aqe(spark):

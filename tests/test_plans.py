@@ -7,6 +7,7 @@ from __future__ import annotations
 import pathlib
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from raqc_spark.checks.integrity import ref_integrity_check
@@ -72,10 +73,11 @@ def test_ci_grep_no_row_udfs_in_engine_source():
     assert not bad, f"row-at-a-time Python UDFs found: {bad}"
 
 
-def test_runner_reads_no_env_toggles():
-    """The runner's behaviour is set by its arguments alone: settled A/B
-    toggles read from the environment stay deleted."""
-    assert "os.environ" not in (ENGINE_DIR / "runner.py").read_text()
+@pytest.mark.parametrize("module", ["runner.py", "functions/simsearch.py"])
+def test_engine_module_reads_no_env_toggles(module):
+    """The runner's and simsearch's behaviour is set by their arguments
+    alone: settled A/B toggles read from the environment stay deleted."""
+    assert "os.environ" not in (ENGINE_DIR / module).read_text()
 
 
 def test_stats_pass_is_single_shared_aggregation(spark, snapshots):
